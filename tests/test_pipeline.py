@@ -30,14 +30,83 @@ def fixture_csv(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def outputs(spark, fixture_csv):
+def built(spark, fixture_csv):
+    """``run_qc_pipeline`` on the fixture, plus what its construction
+    ran (jobs, and the physical plan of each SQL execution behind them)
+    and the persisted RDD ids that existed before it."""
+    from types import SimpleNamespace
+
     from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
     from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
 
     wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
     long = melt_wide(wide, ["o2", "ph"], station_col="station")
     cfg = QCConfig(range_map={"o2": (0.0, 40.0), "ph": (0.0, 13.0)}, z_thresh=6.0)
-    return run_qc_pipeline(long, cfg)
+    sc = spark.sparkContext
+    persisted_before = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "qc-pipeline-construction"
+    sc.setJobGroup(group, "")
+    try:
+        out = run_qc_pipeline(long, cfg)
+    finally:
+        sc.setJobGroup("", "")
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+    return SimpleNamespace(
+        out=out, jobs=jobs, construction_plans=plans, persisted_before=persisted_before
+    )
+
+
+@pytest.fixture(scope="module")
+def outputs(built):
+    return built.out
+
+
+def _nodes_outside_cache(plan):
+    """Node names of an executed plan, not descending into a cached
+    relation's build plan (InMemoryTableScan's inner child)."""
+    name = plan.nodeName()
+    yield name
+    if name == "InMemoryTableScan":
+        return
+    if name == "AdaptiveSparkPlan":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [plan.plan()]
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for k in kids:
+        yield from _nodes_outside_cache(k)
+
+
+def test_pipeline_runs_each_stage_once(built):
+    """Construction runs one action — the variable list, read from the
+    cached clean table, with no detector or SentemQC pandas UDF in its
+    plan — and both time-series sinks read the cached flag + SentemQC
+    table instead of re-running its pandas-UDF and window passes.
+    Runs before test_write_outputs releases the caches.
+
+    (Under AQE every shuffle stage of the clean table's build is its own
+    Spark job, so the construction action is counted as SQL executions,
+    not jobs.)"""
+    assert len(built.construction_plans) <= 1, built.construction_plans
+    for plan in built.construction_plans:
+        assert "InMemoryRelation" in plan, plan
+        assert "FlatMapGroupsIn" not in plan, plan
+    for name in ("timeseries", "timeseries_wide"):
+        plan = getattr(built.out, name)._jdf.queryExecution().executedPlan()
+        nodes = list(_nodes_outside_cache(plan))
+        assert "InMemoryTableScan" in nodes, (name, nodes)
+        assert not [n for n in nodes if n.startswith("FlatMapGroupsIn") or n == "Window"], (
+            name,
+            nodes,
+        )
 
 
 def test_sentinels_masked(outputs):
@@ -115,15 +184,45 @@ def test_seasonal_rows(outputs):
         assert 0.0 <= r.nan_pct <= 100.0
 
 
-def test_write_outputs(outputs, tmp_path):
+def test_write_outputs(spark, built, tmp_path):
+    """The five sinks are written, then every frame run_qc_pipeline
+    cached is released; the outputs still recompute afterwards."""
     import os
 
     from wq_data_pipeline_spark.plans.qc_pipeline import write_outputs
 
+    outputs = built.out
     base = str(tmp_path / "out")
     write_outputs(outputs, base)
     assert os.path.isdir(f"{base}/qc_timeseries_wide/station=stn1")
     assert any(f.endswith(".csv") for f in os.listdir(f"{base}/events"))
+    left = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - built.persisted_before
+    assert not left, f"persisted RDDs outlive write_outputs: {sorted(left)}"
+    assert outputs.timeseries.count() == 2 * 3900
+
+
+def test_widen_discovered_order_ignores_partitioning(spark):
+    """Discovered variables are sorted, so the wide columns do not
+    depend on how the long table is partitioned."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import widen
+    from wq_data_pipeline_spark.plans.sentem_pipeline import sentemqc_wide
+
+    rows = [
+        ("s", v, ts, float(i))
+        for i, v in enumerate(["ph", "o2", "temp"])
+        for ts in ("2024-01-01 00:00:00", "2024-01-01 00:15:00")
+    ]
+    long = spark.createDataFrame(rows, "station STRING, variable STRING, ts STRING, value DOUBLE")
+    long = long.withColumn("ts", long.ts.cast("timestamp"))
+    qc = long.selectExpr(
+        "*", "value AS raw", "value AS clean", "value AS accepted", "0 AS saqc_flag",
+        "0 AS flag_global", "false AS is_flagged", "'' AS flag_reason",
+        "value AS qcband_top", "value AS qcband_bottom", "value AS value_masked",
+    )
+    one, three = qc.coalesce(1), qc.repartition(3, "variable")
+    assert widen(one).columns == widen(three).columns
+    assert sentemqc_wide(one).columns == sentemqc_wide(three).columns
+    assert widen(one).columns[2:6] == ["o2__raw", "o2__clean", "o2__accepted", "o2__saqc_flag"]
 
 
 def test_wrtds_matches_reference_numpy(spark):

@@ -4,22 +4,27 @@ by file path. Prints FAIL lines as they happen, rows-only counts, and
 a final FAILS list (must be [])."""
 
 import importlib.util
+import os
 import sys
 import time
 
 from pyspark.sql import SparkSession
 
-spark = SparkSession.builder.master("local[32]").getOrCreate()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# same core count as session.get_spark
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+spark = SparkSession.builder.master(f"local[{CPUS}]").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py"
+    "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
 )
 E = importlib.util.module_from_spec(spec)
 sys.modules["__spark_entry__"] = E
 spec.loader.exec_module(E)
 rows = E.entry(spark).collect()
 print("entry rows:", len(rows), flush=True)
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from oracle_utils import compare  # noqa: E402
 
 q, o = E.queries(), E.oracle_sql()

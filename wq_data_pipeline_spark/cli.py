@@ -105,14 +105,15 @@ def main(argv: list[str] | None = None) -> None:
         wrtds_buster(res).write.mode("overwrite").option("header", True).csv(
             f"{args.out}/wrtds_spikes"
         )
-    write_outputs(out, args.out)
     if args.figs:
+        # before write_outputs, which releases the caches the figures read
         from wq_data_pipeline_spark.report import render_qc_figures
 
         paths = render_qc_figures(
             out.timeseries, out.events, out.seasonal, f"{args.out}/figs"
         )
         print(f"wrote {len(paths)} figures to {args.out}/figs")
+    write_outputs(out, args.out)
     print(f"wrote QC outputs to {args.out}")
 
 

@@ -949,8 +949,12 @@ def semdedup_within(
         "cluster_id",
     )
     if dim is not None:
+        # a vector narrower than ``dim`` gives a NULL dot, as the
+        # zip_with path does, instead of an ANSI index error
         dot = F.expr(
-            "(" + " + ".join(f"`_qa`[{i}] * `_qb`[{i}]" for i in range(dim)) + ")"
+            f"CASE WHEN size(`_qa`) >= {dim} AND size(`_qb`) >= {dim} THEN ("
+            + " + ".join(f"`_qa`[{i}] * `_qb`[{i}]" for i in range(dim))
+            + ") END"
         )
     else:
         dot = F.aggregate(

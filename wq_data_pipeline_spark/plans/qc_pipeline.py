@@ -244,13 +244,15 @@ def widen(qc: DataFrame, variables: list[str] | None = None) -> DataFrame:
     full-outer joins) was 4 shuffles over the same key.
 
     Pass ``variables`` to keep the plan fully lazy; when omitted it is
-    discovered with a distinct-collect on the (tiny) variable column.
+    discovered with a distinct-collect on the variable column, which
+    runs ``qc``'s whole plan once, and sorted so the column order does
+    not depend on partitioning.
     """
     suffixes = ["raw", "clean", "accepted", "saqc_flag"] + [
         s for s in ("sm_masked", "sm_flagged", "sm_flagreason") if s in qc.columns
     ]
     if variables is None:
-        variables = [r[0] for r in qc.select("variable").distinct().collect()]
+        variables = sorted(r[0] for r in qc.select("variable").distinct().collect())
     packed = (
         qc.groupBy("station", "ts")
         .pivot("variable", variables)
@@ -270,36 +272,58 @@ class QCOutputs:
     events: DataFrame
     seasonal: DataFrame
     meta: DataFrame
+    # frames run_qc_pipeline cached; write_outputs releases them
+    cached: list[DataFrame] = field(default_factory=list)
 
 
 def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutputs:
     """The full DAG. ``readings`` is the canonical long table
-    (station, variable, ts, value). The cleaned table feeds ~4
-    downstream branches, so it is cached (reference recomputes nothing
+    (station, variable, ts, value).
+
+    Each stage runs once per pass: three frames are cached because
+    more than one output reads them (reference recomputes nothing
     because everything lives in RAM; on Spark an uncached plan would
-    re-clean per action — SURVEY §4.1 'Caching / reuse')."""
+    re-run per action — SURVEY §4.1 'Caching / reuse'):
+
+    - ``cleaned`` feeds the flag, event, seasonal and widen branches;
+    - ``flagged`` (flags + SentemQC, the pandas-UDF passes) is both
+      ``timeseries`` and the input of ``timeseries_wide``;
+    - ``events`` is an output and the input of ``seasonal``.
+
+    The wide pivot's variable list comes from a distinct-collect on
+    the cached clean table (sorted) — the one action construction runs.
+    :func:`write_outputs` unpersists the three caches after its sinks
+    (they are listed in ``QCOutputs.cached``); a caller that does not
+    write reads the caches until it unpersists them itself."""
     cfg = cfg or QCConfig()
     cleaned = clean_stage(readings, cfg).cache()
     flagged = flag_stage(cleaned, cfg)
     if cfg.apply_sentem:
         flagged = sentem_stage(flagged)
-    events = event_stage(cleaned, cfg)
+    flagged = flagged.cache()
+    events = event_stage(cleaned, cfg).cache()
     seasonal = seasonal_stage(cleaned, events)
     meta = meta_stage(readings, cfg)
-    wide = widen(flagged)
+    variables = sorted(r[0] for r in cleaned.select("variable").distinct().collect())
+    wide = widen(flagged, variables)
     return QCOutputs(
         timeseries=flagged,
         timeseries_wide=wide,
         events=events,
         seasonal=seasonal,
         meta=meta,
+        # dependents first: unpersisting a cache re-plans any not yet
+        # loaded cache built on top of it
+        cached=[flagged, events, cleaned],
     )
 
 
 def write_outputs(out: QCOutputs, base_dir: str) -> None:
     """Sinks S4-S6: partitioned parquet for the big series (station
     partition -> dynamic partition pruning on read), single-file CSVs
-    for the small report tables."""
+    for the small report tables. The pipeline's last action: it then
+    unpersists the frames :func:`run_qc_pipeline` cached, so reading
+    an output afterwards recomputes it."""
     out.timeseries_wide.write.mode("overwrite").partitionBy("station").parquet(
         f"{base_dir}/qc_timeseries_wide"
     )
@@ -310,3 +334,5 @@ def write_outputs(out: QCOutputs, base_dir: str) -> None:
         df.coalesce(1).write.mode("overwrite").option("header", True).csv(
             f"{base_dir}/{name}"
         )
+    for df in out.cached:
+        df.unpersist()

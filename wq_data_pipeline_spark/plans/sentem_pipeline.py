@@ -188,7 +188,7 @@ def sentemqc_wide(
         ("value_masked", "masked"),
     ]
     if variables is None:
-        variables = [r[0] for r in out_long.select("variable").distinct().collect()]
+        variables = sorted(r[0] for r in out_long.select("variable").distinct().collect())
     packed = (
         out_long.groupBy("station", "ts")
         .pivot("variable", variables)
