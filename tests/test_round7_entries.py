@@ -283,11 +283,14 @@ def test_seasonal_naive_skips_gap_hours(spark):
 
 def test_sql_built_signatures_match_column_form(spark):
     """r13: banded_signatures / rp_lsh_signature assemble their plane
-    folds as ONE parsed SQL expression (the Column-by-Column form was
-    3-5 s of py4j plan building per call). The parsed tree must be
-    operation-identical — every band/sig bit equal on adversarial
-    values: negatives, exact .5 rounding boundaries, zeros (sign test
-    is strict >0), and magnitudes where double sums are exact."""
+    folds as ONE parsed SQL expression. Every band/sig bit must equal
+    the signature computed column by column in Python from
+    ``hyperplane_components`` (round half away from zero, left-fold
+    dot, bit p set when the dot is strictly > 0) on adversarial
+    values: negatives, exact .5 rounding boundaries, zeros, and
+    magnitudes where double sums are exact."""
+    import math
+
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
@@ -303,27 +306,31 @@ def test_sql_built_signatures_match_column_form(spark):
         Row(vec_id=3, embedding=[-1000.25, 1000.75, -0.5, 0.5, 1.0, -1.0, 7.5, -7.5]),
         Row(vec_id=4, embedding=[float(i) for i in range(8)]),
     ]
+
+    def rounded(v):
+        return [int(math.copysign(math.floor(abs(x) + 0.5), x)) for x in v]
+
+    def sig(v, n_planes, offset):
+        out = 0
+        for p in range(n_planes):
+            acc = 0.0
+            for x, h in zip(v, hyperplane_components(offset + p, len(v))):
+                acc += float(x) * h
+            out += (1 << p) if acc > 0 else 0
+        return out
+
     emb = spark.createDataFrame(rows)
-    new = banded_signatures(emb, "vec_id", "embedding", 8, 4, 8)
-    # legacy Column assembly (what banded_signatures used to emit)
+    got = sorted(map(tuple, banded_signatures(emb, "vec_id", "embedding", 8, 4, 8).collect()))
+    want = sorted(
+        (r.vec_id, b, sig(rounded(r.embedding), 4, b * 4))
+        for r in rows
+        for b in range(8)
+    )
+    assert got == want
+    # rp_lsh_signature on an already-quantized column
     vqc = F.transform(F.col("embedding"), lambda x: F.round(x).cast("long"))
-    sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                rp_lsh_signature(vqc, 4, plane_offset=b * 4, dim=None).alias("sig"),
-            )
-            for b in range(8)
-        ]
-    )
-    old = emb.select(F.col("vec_id"), F.explode(sigs).alias("bs")).select(
-        "vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
-    # the str+dim fast path of rp_lsh_signature matches its Column path
     q = emb.select("vec_id", vqc.alias("q"))
-    fast = q.select("vec_id", rp_lsh_signature("q", 6, 3, dim=8).alias("s"))
-    slow = q.select("vec_id", rp_lsh_signature(F.col("q"), 6, 3, dim=8).alias("s"))
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
+    got = sorted(map(tuple, q.select("vec_id", rp_lsh_signature("q", 6, 3, dim=8)).collect()))
+    assert got == sorted((r.vec_id, sig(rounded(r.embedding), 6, 3)) for r in rows)
     # sanity: the plane components themselves are deterministic md5 signs
     assert set(hyperplane_components(0, 8)) <= {1.0, -1.0}

@@ -2,16 +2,12 @@
 
 The `assignment="auto"` gate resolves to the exact/broadcast Lloyd
 rounds while k*dim fits the broadcast budget and to the banded LSH
-rounds only past it. The two semdedup entries now train through the
-gate (exact at every oracle/bench scale), so the banded SQL replay
-(`_kmeans_banded_prefix_sql`) is no longer exercised by the entry
-oracles — the parity test here keeps it validated against the engine's
-banded trainer directly.
+rounds only past it. The two semdedup entries train through the gate
+(exact at every oracle/bench scale).
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 SF0001 = "/root/testdata/sf0.001"
@@ -79,54 +75,6 @@ def test_auto_mode_resolves_banded_past_gate(spark):
     a = {r["centroid_id"]: list(r["q"]) for r in banded_via_auto}
     b = {r["centroid_id"]: list(r["q"]) for r in banded}
     assert a == b
-
-
-def test_banded_prefix_sql_still_matches_engine(spark):
-    """The banded DuckDB replay (no longer behind any entry oracle)
-    stays bit-exact against the engine: banded trainer + exact final
-    assignment == `SELECT vec_id, bucket FROM av` of
-    `_kmeans_banded_prefix_sql`."""
-    import duckdb
-
-    from tests.oracle_utils import duck_con
-    from wq_data_pipeline_spark.operators.similarity import (
-        cosine,
-        kmeans_centroids,
-    )
-    from wq_data_pipeline_spark.plans.queries_ext import (
-        _kmeans_banded_prefix_sql,
-        _quantized,
-    )
-    from wq_data_pipeline_spark.sources.testdata import load_table
-
-    k, iters = 8, 3  # iters must equal _KM_ITERS (the prefix unrolls it)
-    emb = (
-        load_table(spark, SF0001, "embeddings")
-        .select("vec_id", _quantized("embedding").alias("q"))
-        .repartition(8)
-    )
-    cent = kmeans_centroids(
-        emb, k=k, iters=iters, vec_col="q", assignment="banded"
-    )
-    c = cent.select(F.col("centroid_id").alias("_cid"), F.col("q").alias("_cv"))
-    got = {
-        r["vec_id"]: r["bucket"]
-        for r in (
-            emb.crossJoin(F.broadcast(c))
-            .select("vec_id", "_cid", cosine("q", "_cv").alias("_cs"))
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.col("_cid"), F.struct(F.col("_cs"), -F.col("_cid"))
-                ).alias("bucket")
-            )
-            .collect()
-        )
-    }
-    con = duck_con(SF0001)
-    sql = _kmeans_banded_prefix_sql(str(k)) + "\nSELECT vec_id, bucket FROM av"
-    want = dict(con.execute(sql).fetchall())
-    assert got == want
 
 
 def test_des_kernel_composition_invariants():
@@ -197,18 +145,16 @@ def test_token_entropy_extremes(spark):
 
 def test_lcp_capped_randomized_against_brute_force(spark):
     """Property check over 300 seeded random cases on a 2-letter
-    alphabet (forces long shared prefixes): the greedy-binary-descent
-    LCP columns match a Python brute force exactly at cap=63 — and
-    the all-ones cap guard rejects the decomposition-inexact cap=5
-    (ADVICE r7)."""
+    alphabet (forces long shared prefixes): the capped-LCP tree
+    (``_lcp_key_tree_sql``) over two suffix expressions matches a
+    Python brute force exactly, cross-text and same-text, at the
+    all-ones cap 63 and at cap 5 (the binary search is exact for any
+    cap)."""
     import random
 
     from pyspark.sql import functions as F
 
-    from wq_data_pipeline_spark.operators.suffix import (
-        _lcp_capped,
-        _lcp_capped2,
-    )
+    from wq_data_pipeline_spark.operators.suffix import _lcp_key_tree_sql
 
     rng = random.Random(8)
     rows = []
@@ -217,12 +163,10 @@ def test_lcp_capped_randomized_against_brute_force(spark):
         tb = "".join(rng.choice("ab") for _ in range(rng.randint(2, 120)))
         a = rng.randrange(len(ta))
         b = rng.randrange(len(tb))
-        # same-text case needs distinct positions (the documented
-        # different-suffix-length precondition of _lcp_capped)
         p, q = sorted(rng.sample(range(len(ta)), 2))
         rows.append((i, ta, tb, a, b, p, q))
 
-    def brute(x: str, y: str, cap: int = 63) -> int:
+    def brute(x: str, y: str, cap: int) -> int:
         m = 0
         for cx, cy in zip(x[:cap], y[:cap]):
             if cx != cy:
@@ -230,27 +174,28 @@ def test_lcp_capped_randomized_against_brute_force(spark):
             m += 1
         return m
 
+    def tree(ka: str, kb: str, cap: int):
+        return F.expr(_lcp_key_tree_sql(ka, kb, cap))
+
+    sa, sb = "substr(`ta`, `a` + 1)", "substr(`tb`, `b` + 1)"
+    sp, sq = "substr(`ta`, `p` + 1)", "substr(`ta`, `q` + 1)"
     df = spark.createDataFrame(
         rows, "i INT, ta STRING, tb STRING, a INT, b INT, p INT, q INT"
     )
     got = {
-        r["i"]: (r["x"], r["s"])
+        r["i"]: r
         for r in df.select(
             "i",
-            _lcp_capped2(
-                F.col("ta"), F.col("a"), F.col("tb"), F.col("b"), 63
-            ).alias("x"),
-            _lcp_capped(F.col("p"), F.col("q"), F.col("ta"), 63).alias("s"),
+            tree(sa, sb, 63).alias("x63"),
+            tree(sp, sq, 63).alias("s63"),
+            tree(sa, sb, 5).alias("x5"),
+            tree(sp, sq, 5).alias("s5"),
         ).collect()
     }
     for i, ta, tb, a, b, p, q in rows:
-        assert got[i][0] == brute(ta[a:], tb[b:]), (i, ta[a:], tb[b:])
-        assert got[i][1] == brute(ta[p:], ta[q:]), (i, ta[p:], ta[q:])
-
-    with pytest.raises(ValueError, match="all-ones"):
-        _lcp_capped(F.col("p"), F.col("q"), F.col("ta"), 5)
-    with pytest.raises(ValueError, match="all-ones"):
-        _lcp_capped2(F.col("ta"), F.col("a"), F.col("tb"), F.col("b"), 5)
+        for cap in (63, 5):
+            assert got[i][f"x{cap}"] == brute(ta[a:], tb[b:], cap), (i, cap)
+            assert got[i][f"s{cap}"] == brute(ta[p:], ta[q:], cap), (i, cap)
 
 
 def test_theil_sen_trend_hand_computed(spark):

@@ -143,26 +143,6 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
         assert a == b, how
 
 
-def test_lsh_near_dup_subset_and_recall(spark, sf_dir):
-    """Banded-LSH near-dup (the 100-TB candidate-generation path) must
-    return a SUBSET of the exact all-pairs result (no false positives
-    survive the exact-cosine filter) and full recall at 16 bands on
-    the test corpus — even at the deliberately hard 0.45 threshold
-    (real near-dup thresholds >=0.9 collide far more readily)."""
-    from wq_data_pipeline_spark.operators.similarity import (
-        exact_near_dup_pairs,
-        near_dup_pairs,
-    )
-    from wq_data_pipeline_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = {(r.id_a, r.id_b) for r in exact_near_dup_pairs(emb, 0.45).collect()}
-    got = {(r.id_a, r.id_b) for r in near_dup_pairs(emb, 0.45, n_bands=16).collect()}
-    assert exact, "threshold produced a degenerate empty ground truth"
-    assert got <= exact
-    assert got == exact  # 100% recall at 16 bands on this corpus
-
-
 def test_embed_near_dup_plan_has_no_cartesian(spark, sf_dir):
     """The CATALOGED embed_near_dup query must be the banded-LSH plan:
     its physical plan contains no CartesianProduct / BroadcastNestedLoop

@@ -14,7 +14,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from wq_data_pipeline_spark.operators.windows import SERIES_KEYS, ordered, with_ts_delta
+from wq_data_pipeline_spark.operators.windows import SERIES_KEYS, with_ts_delta
 
 DEFAULT_SENTINELS = (-9.0, -99.0, -999.0, -9999.0)
 
@@ -172,21 +172,3 @@ def null_gap_values(
     scripts/ufz_water_qc_pipeline.py:673-675)."""
     out = out or value
     return df.withColumn(out, F.when(F.col(gap_flag), None).otherwise(F.col(value)))
-
-
-def clean_series(
-    df: DataFrame,
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    value: str = "value",
-    sentinels: Sequence[float] = DEFAULT_SENTINELS,
-    max_gap_seconds: float = 7200.0,
-) -> DataFrame:
-    """The reference's ``__clean`` derivation as one lazy plan:
-    sentinel mask -> duplicate median-resolve -> gap-null
-    (process_variable steps, scripts/ufz_water_qc_pipeline.py:666-675).
-    """
-    d = mask_sentinels(df, keys, value, sentinels)
-    d = resolve_duplicates(d, keys, ts, value)
-    d = classify_gaps(d, keys, ts, max_gap_seconds)
-    return null_gap_values(d, value)

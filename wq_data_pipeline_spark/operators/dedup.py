@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from wq_data_pipeline_spark.operators.pinning import pin
-from wq_data_pipeline_spark.operators.text import distinct_words, doc_fingerprint, word_shingles
+from wq_data_pipeline_spark.operators.text import distinct_words, doc_fingerprint
 
 
 def exact_dedup(
@@ -74,21 +74,6 @@ def shingle_hash(col: str | Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signature(
-    text: str | Column, num_hashes: int = 32, shingle_n: int = 3
-) -> list[Column]:
-    """MinHash signature (per-row array form): min over shingles of
-    (A_i*h + B_i) mod (2^61-1) where h = shingle_hash. One md5 per
-    shingle regardless of k."""
-    sh = word_shingles(text, shingle_n)
-    hashed = F.transform(sh, lambda s: shingle_hash(s))
-    sigs = []
-    for i, (a, b) in enumerate(minhash_coeffs(num_hashes)):
-        perm = F.transform(hashed, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MH_P))
-        sigs.append(F.array_min(perm).alias(f"mh{i}"))
-    return sigs
-
-
 def minhash_signatures_table(
     df: DataFrame,
     text: str = "text",
@@ -98,13 +83,12 @@ def minhash_signatures_table(
 ) -> DataFrame:
     """MinHash signatures via explode + groupBy — the scale form.
 
-    The per-row array formulation (:func:`minhash_signature`) rebuilds
-    the shingle array once per signature column; exploding shingles to
-    rows computes them once and the per-seed minima come from one
-    partial-aggregated groupBy (map-side combine, one shuffle on id).
-    ``explode_outer`` keeps shingle-less docs (NULL signature), like
-    the per-row form. One md5 per shingle row; the k permutations are
-    integer multiply-add-mod (cheap JVM codegen, no string churn).
+    A per-row array formulation would rebuild the shingle array once
+    per signature column; exploding shingles to rows computes them
+    once and the per-seed minima come from one partial-aggregated
+    groupBy (map-side combine, one shuffle on id). ``explode_outer``
+    keeps shingle-less docs (NULL signature). One md5 per shingle
+    row; the k permutations are integer multiply-add-mod (cheap JVM codegen, no string churn).
     The token array is materialized as a column BEFORE the shingle
     transform so the tokenize runs once per document — an inline
     ``tokens(text)`` expression re-evaluates per gram position inside

@@ -56,13 +56,6 @@ def non_negative(col: str) -> Check:
     )
 
 
-def matches(col: str, pattern: str, name: str | None = None) -> Check:
-    return Check(
-        name or f"matches({col})",
-        F.col(col).isNotNull() & ~F.col(col).rlike(pattern),
-    )
-
-
 def run_suite(df: DataFrame, table: str, checks: list[Check]) -> DataFrame:
     """One row per check: (table_name, check_name, n_rows,
     n_violations, passed). One scan, one agg, no shuffle beyond the

@@ -38,14 +38,6 @@ DECODED_SCHEMA = T.StructType(
 )
 
 
-def binary_meta(df: DataFrame, content: str = "content") -> DataFrame:
-    """Cheap JVM-side metadata over binary columns: byte length + md5
-    digest (no Python boundary)."""
-    return df.withColumn("n_bytes", F.octet_length(content)).withColumn(
-        "digest", F.md5(F.col(content))
-    )
-
-
 def decode_media(df: DataFrame, fake: bool = False, batch_limit: int = 256) -> DataFrame:
     """Decode binary media via mapInPandas (Arrow batches).
 
@@ -196,20 +188,6 @@ def extract_features(df: DataFrame, dim: int = 16, fake: bool = False) -> DataFr
             yield pd.DataFrame(out, columns=[f.name for f in FEATURES_SCHEMA.fields])
 
     return df.select("media_id", "content").mapInPandas(_extract, FEATURES_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing: pick every Nth media row per mime
-    (stand-in for temporal sampling; the real sampler would emit
-    multiple rows per video via the same mapInPandas shape)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("mime").orderBy("media_id")
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") - 1) % every_n == 0)
-        .drop("_rn")
-    )
 
 
 AHASH_SCHEMA = T.StructType(

@@ -176,50 +176,6 @@ def rolling_mean_std_prefix(
 # form wins decisively (measured crossover well below 128 at 1M rows)
 PREFIX_WINDOW_THRESHOLD = 128
 
-# percentile-over-frame re-sorts the frame per row (O(n·w·log w)),
-# but the pandas engine pays a full shuffle + Arrow round trip —
-# measured break-even ABOVE w=48 (EP1 1M rows: 23.6 s JVM median@48
-# vs 27.5 s pandas median@48); only wide medians should cross
-MEDIAN_PANDAS_THRESHOLD = 128
-
-
-def rolling_median_std_pandas(
-    df: DataFrame,
-    value: str = "value",
-    window: int = 48,
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    minp: int | None = None,
-    ma_col: str = "ma",
-    sd_col: str = "sd",
-) -> DataFrame:
-    """Rolling MEDIAN center + population std via applyInPandas —
-    the scale engine for the median band passes: pandas' rolling
-    median is a C skiplist (O(n log w)) vs percentile-over-frame's
-    per-row re-sort. Same exact medians and ddof=0 std as
-    :func:`rolling_mean_std` (equivalence-tested); needs memory for
-    per-series Arrow batches like every applyInPandas island."""
-    import math
-
-    from pyspark.sql import types as T
-
-    if minp is None:
-        minp = max(3, math.ceil(window * 0.3))
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(ma_col, T.DoubleType()), T.StructField(sd_col, T.DoubleType())]
-    )
-
-    def fr(pdf):
-        pdf = pdf.sort_values(ts).reset_index(drop=True)
-        s = pdf[value].astype(float)
-        r = s.rolling(window, center=True, min_periods=minp)
-        pdf[ma_col] = r.median()
-        pdf[sd_col] = r.std(ddof=0)
-        return pdf
-
-    return df.groupBy(*list(keys)).applyInPandas(fr, schema)
-
 TRI5_WEIGHTS = (1.0, 2.0, 3.0, 2.0, 1.0)
 
 
@@ -352,25 +308,19 @@ def apply_band_pass(
     flag_col: str = "flag_band",
     top_col: str | None = None,
     bottom_col: str | None = None,
-    fast: bool = False,
 ) -> DataFrame:
     """One full band pass: center/std -> bands -> overlap flag.
     Optionally materializes the band columns (run 5 exports them,
     scripts/sentemqc.py:105-111).
 
-    ``fast=True`` routes the pipeline hot path to the scale engines:
-    wide MEAN windows (>= PREFIX_WINDOW_THRESHOLD) through the O(n)
-    prefix-sum form, MEDIAN windows (>= MEDIAN_PANDAS_THRESHOLD)
-    through the pandas skiplist engine. Leave False where results feed
-    a bit-exact cross-engine oracle."""
+    The engine follows the window width: MEAN windows of
+    PREFIX_WINDOW_THRESHOLD points or more run the O(n) prefix-sum
+    form, every other window (all medians included) the frame
+    engine."""
     if cfg.stat == "tri5":
         d = tri5_mean_std(df, value, keys, ts, ma_col="_ma", sd_col="_sd")
-    elif fast and cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
+    elif cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
         d = rolling_mean_std_prefix(
-            df, value, cfg.window, keys, ts, ma_col="_ma", sd_col="_sd"
-        )
-    elif fast and cfg.stat == "median" and cfg.window >= MEDIAN_PANDAS_THRESHOLD:
-        d = rolling_median_std_pandas(
             df, value, cfg.window, keys, ts, ma_col="_ma", sd_col="_sd"
         )
     else:
@@ -396,20 +346,16 @@ def apply_sentemqc(
     ts: str = "ts",
     passes: Sequence[BandPassCfg] = DEFAULT_PASSES,
     sensor_code: int | None = None,
-    fast: bool = False,
 ) -> DataFrame:
     """The reference's apply_sentemqc_to_series pipeline
     (scripts/sentemqc.py:80-114): pre-mask -> per-pass band flags ->
     combined flag + reasons + masked value. Returns the input plus
     ``flag_run{i}``, ``flag_sensor``, ``flag_global``, ``is_flagged``,
-    ``flag_reason``, ``value_masked``. ``fast`` routes wide windows
-    through the scale engines (pipeline hot path)."""
+    ``flag_reason``, ``value_masked``."""
     d = df.withColumn(value, premask_nonpositive(value))
     named: dict[str, Column] = {}
     for i, cfg in enumerate(passes, start=1):
-        d = apply_band_pass(
-            d, cfg, value, keys, ts, flag_col=f"flag_run{i}", fast=fast
-        )
+        d = apply_band_pass(d, cfg, value, keys, ts, flag_col=f"flag_run{i}")
         named[f"flag_run{i}"] = F.col(f"flag_run{i}")
     if sensor_code is not None:
         d = d.withColumn("flag_sensor", sensor_error_flag(value, sensor_code))

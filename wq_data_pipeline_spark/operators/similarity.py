@@ -61,18 +61,6 @@ def brute_force_topk(
     )
 
 
-def _pseudo_hyperplane_component(dim_idx: Column, plane: int) -> Column:
-    """Deterministic ±1 hyperplane component from a hash — portable
-    and seedless (no RNG; resume-safe)."""
-    return F.when(
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(plane), dim_idx)), 1, 1), 16, 10)
-        .cast("int")
-        % 2
-        == 0,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
-
-
 def hyperplane_components(plane: int, dim: int) -> list[float]:
     """Driver-side precompute of the ±1 hyperplane: identical digests
     to the JVM path (md5 is md5), but evaluated ONCE instead of per
@@ -90,11 +78,10 @@ def hyperplane_components(plane: int, dim: int) -> list[float]:
 
 def _rp_sig_sql(vec_sql: str, n_planes: int, plane_offset: int, dim: int) -> str:
     """SQL text of the ``n_planes``-bit signature over the vector
-    expression ``vec_sql`` — the same Catalyst operations
-    :func:`rp_lsh_signature` used to assemble Column-by-Column
-    (zip_with × literal ±1 plane, left-fold aggregate seeded with a
-    double 0.0, CASE per bit), emitted as ONE string for ONE
-    ``F.expr`` parse. Why (r13, guide §1.2 per-task → per-BUILD
+    expression ``vec_sql`` — the Catalyst operations a Column-by-
+    Column assembly would build (zip_with × literal ±1 plane, left-
+    fold aggregate seeded with a double 0.0, CASE per bit), emitted
+    as ONE string for ONE ``F.expr`` parse. Why (r13, guide §1.2 per-task → per-BUILD
     work): assembling 8 bands × planes folds through the Python
     Column API is thousands of py4j round-trips — measured 3-5 s of
     driver-side plan construction per banded_signatures call, the
@@ -116,43 +103,16 @@ def _rp_sig_sql(vec_sql: str, n_planes: int, plane_offset: int, dim: int) -> str
 
 
 def rp_lsh_signature(
-    vec_col: str | Column,
-    n_planes: int = 4,
-    plane_offset: int = 0,
-    dim: int | None = None,
+    vec_col: str, n_planes: int, plane_offset: int, dim: int
 ) -> Column:
-    """Random-hyperplane LSH signature: bit p = sign(v · h_p) with
-    h_p ∈ {±1}^d derived from md5. ``plane_offset`` selects an
-    independent plane set per band.
-
-    When ``dim`` (the embedding width) is known, the planes are baked
-    in as literal arrays — the md5 work moves to the driver, executors
-    do pure multiply-adds — and for a plain column name the whole
-    signature is built via :func:`_rp_sig_sql` (one expr parse, not
-    thousands of py4j calls; bit-identical tree). Without ``dim`` the
-    components are derived per element in the JVM (same digests, any
-    width)."""
-    if isinstance(vec_col, str) and dim is not None:
-        return F.expr(_rp_sig_sql(f"`{vec_col}`", n_planes, plane_offset, dim))
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    sig = F.lit(0)
-    for p in range(n_planes):
-        if dim is not None:
-            plane = F.array(
-                *[F.lit(c) for c in hyperplane_components(plane_offset + p, dim)]
-            )
-            comp = F.zip_with(v, plane, lambda x, h: x.cast("double") * h)
-        else:
-            idx = F.sequence(F.lit(0), F.size(v) - 1)
-            comp = F.zip_with(
-                v,
-                idx,
-                lambda x, i: x.cast("double")
-                * _pseudo_hyperplane_component(i, plane_offset + p),
-            )
-        s = F.aggregate(comp, F.lit(0.0), lambda a, x: a + x)
-        sig = sig + F.when(s > 0, F.lit(1 << p)).otherwise(0)
-    return sig
+    """Random-hyperplane LSH signature of the ``dim``-wide array column
+    ``vec_col``: bit p = sign(v · h_p) with h_p ∈ {±1}^dim derived from
+    md5. ``plane_offset`` selects an independent plane set per band.
+    The planes are baked in as literal arrays — the md5 work runs on
+    the driver, executors do pure multiply-adds — and the signature is
+    built via :func:`_rp_sig_sql` (one expr parse, not thousands of
+    py4j calls)."""
+    return F.expr(_rp_sig_sql(f"`{vec_col}`", n_planes, plane_offset, dim))
 
 
 def auto_planes_per_band(k: int) -> int:
@@ -184,22 +144,6 @@ def banded_signatures(
     3-5 s of py4j plan building per call at 8 bands; the parsed tree
     is operation-identical, so every bit matches)."""
     first = df.columns[0]
-    if dim is None:  # width unknown: per-element JVM digests (legacy)
-        vqc = F.transform(F.col(vec_col), lambda x: F.round(x).cast("long"))
-        sigs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    rp_lsh_signature(
-                        vqc, planes, plane_offset=b * planes, dim=None
-                    ).alias("sig"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return df.select(
-            F.col(first).alias(id_out), F.explode(sigs).alias("bs")
-        ).select(id_out, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
     vq = f"transform(`{vec_col}`, x -> CAST(round(x) AS BIGINT))"
     structs = ",".join(
         f"named_struct('band', {b}, 'sig', "
@@ -550,8 +494,7 @@ def _kmeans_distributed(
     conservative direction; empty clusters keep their previous
     centroid as always). planes/band follows
     :func:`auto_planes_per_band`; every signature bit is integer-dot
-    exact, so the oracle replays the rounds bit-for-bit
-    (queries_ext._kmeans_banded_prefix_sql).
+    exact.
 
     ``banded=False`` keeps the exact O(n·k) assignment with the
     per-round k-row broadcast — bit-identical to the literal mode on
@@ -685,131 +628,6 @@ def kmeans_inertia(
     return best.agg(
         F.sum(F.lit(1.0) - cosine(vec_col, "_cv")).alias("s")
     ).first()["s"]
-
-
-def near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.9,
-    n_bands: int = 8,
-    planes_per_band: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate detection (the dedup-family
-    member over vectors): candidate pairs from banded random-hyperplane
-    LSH self-join, then exact cosine >= threshold. Output one row per
-    unordered pair ``(id_a < id_b, cos_sim)``.
-
-    At scale this replaces the O(n^2) all-pairs cross join with ONE
-    shuffle of skinny (id, band, sig) rows — bands are unpivoted to
-    rows and self-joined on (band, sig) in a single exchange, and the
-    vector payloads are joined back only for surviving candidate
-    pairs. (The r1 one-join-per-band union ran n_bands shuffle legs
-    concurrently and carried vectors through every one.) Recall
-    follows the 1-(1-p^r)^b amplification curve, so high thresholds
-    (true near-dups, p -> 1) are caught with near-certainty; the exact
-    all-pairs form (``exact_near_dup_pairs``) is the ground truth the
-    tests compare against."""
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                rp_lsh_signature(
-                    vec_col, planes_per_band, plane_offset=b * planes_per_band, dim=dim
-                ).alias("sig"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    d = corpus.select(F.col(id_col), F.explode(band_sigs).alias("bs")).select(
-        id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    a = d.select(F.col(id_col).alias("id_a"), "band", "sig")
-    b = d.select(F.col(id_col).alias("id_b"), "band", "sig")
-    cand = (
-        a.join(b, on=["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cosine("_va", "_vb").alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def exact_near_dup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Ground-truth all-pairs variant (O(n^2) — small corpora /
-    validation only)."""
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    j = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-    return j.select(
-        "id_a", "id_b", cosine("_va", "_vb").alias("cos_sim")
-    ).filter(F.col("cos_sim") >= threshold)
-
-
-def lsh_bucketed_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_bands: int = 4,
-    planes_per_band: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    dim: int | None = None,
-) -> DataFrame:
-    """ANN top-k with banded OR-amplification: a candidate matches if
-    it shares ANY band signature with the query (n_bands independent
-    plane sets), then exact cosine within the candidate set.
-
-    At scale the candidate generation is ONE broadcast join on
-    (band, sig) pairs — bands unpivoted to rows on both sides, the
-    (small) query side broadcast — instead of a cross join or one
-    join leg per band; recall rises with n_bands (1 − (1 − p^r)^b
-    curve), precision with planes_per_band."""
-
-    def banded(side: DataFrame, out_id: str) -> DataFrame:
-        sigs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    rp_lsh_signature(
-                        vec_col, planes_per_band, plane_offset=b * planes_per_band, dim=dim
-                    ).alias("sig"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return side.select(
-            F.col(id_col).alias(out_id), F.explode(sigs).alias("bs")
-        ).select(out_id, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-
-    cand = (
-        banded(corpus, "neighbor_id")
-        .join(F.broadcast(banded(queries, qid_col)), on=["band", "sig"])
-        .filter(F.col("neighbor_id") != F.col(qid_col))
-        .dropDuplicates([qid_col, "neighbor_id"])
-    )
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    qv = queries.select(F.col(id_col).alias(qid_col), F.col(vec_col).alias("_qv"))
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), qid_col)
-        .select(qid_col, "neighbor_id", cosine("_cv", "_qv").alias("cos_sim"))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def quantized_cosine(a: str | Column, b: str | Column) -> Column:

@@ -12,7 +12,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from wq_data_pipeline_spark.functions.scalars import frac_part, season_expr
-from wq_data_pipeline_spark.operators.windows import SERIES_KEYS, ordered, with_diff
+from wq_data_pipeline_spark.operators.windows import SERIES_KEYS, with_diff
 
 
 def seasonal_stats(
@@ -263,24 +263,3 @@ def global_robust_z(
         .filter(F.abs(F.col("robust_z")) >= thresh)
         .drop("_med", "_mad")
     )
-
-
-def availability_stats(
-    df: DataFrame,
-    keys: Sequence[str] = SERIES_KEYS,
-    value: str = "value",
-    flag: str | None = None,
-) -> DataFrame:
-    """% finite / % flagged per series (A9; reference
-    scripts/sentemqc.py:167-169)."""
-    keys = list(keys)
-    aggs = [
-        F.round(F.avg(F.col(value).isNotNull().cast("double")) * 100, 4).alias(
-            "pct_available"
-        )
-    ]
-    if flag:
-        aggs.append(
-            F.round(F.avg(F.col(flag).cast("double")) * 100, 4).alias("pct_flagged")
-        )
-    return df.groupBy(*keys).agg(*aggs)

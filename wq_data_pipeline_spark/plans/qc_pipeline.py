@@ -64,11 +64,6 @@ class QCConfig:
     var_tol: float = 1e-12
     isolated_group_points: int = 2  # '30min' at 15-min step
     isolated_gap_seconds: float = 3 * 3600.0  # '3h'
-    # 'pandas': skiplist rolling median (~38x faster at w=96) via
-    # applyInPandas — needs executor/driver memory sized for Arrow
-    # group batches (a 1 GB local driver OOMs around 1M rows);
-    # 'window': pure-JVM streaming frames, slower but memory-lean
-    z_engine: str = "pandas"
 
 
 def clean_stage(readings: DataFrame, cfg: QCConfig) -> DataFrame:
@@ -88,10 +83,12 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
     d = cleaned.withColumnRenamed("clean", "value")
     # engine='pandas': skiplist rolling median beats WindowExec's
     # per-row frame scan ~38x at w=96 (pipeline hot path; the
-    # oracle-gated catalog queries keep the pure-JVM window engine)
+    # oracle-gated catalog queries keep the pure-JVM window engine).
+    # It needs executor/driver memory sized for Arrow group batches
+    # (a 1 GB local driver OOMs around 1M rows).
     d = D.flag_robust_z(
         d, "value", cfg.z_window_points, cfg.z_thresh, KEYS, "ts", out="f_z",
-        engine=cfg.z_engine,
+        engine="pandas",
     )
     flags = [F.col("f_z"), D.flag_missing("value")]
     if cfg.range_map:
@@ -221,9 +218,9 @@ def sentem_stage(flagged: DataFrame) -> DataFrame:
     from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
 
     d = flagged.withColumn("_sv", F.col("clean"))
-    # fast=True: 960-point mean windows run O(n) prefix-sum and the
-    # 48-point median pass the pandas skiplist — the pipeline hot path
-    d = apply_sentemqc(d, value="_sv", keys=KEYS, ts="ts", fast=True)
+    # the 960-point mean windows run the O(n) prefix-sum form; the
+    # 48-point median pass stays on the frame engine
+    d = apply_sentemqc(d, value="_sv", keys=KEYS, ts="ts")
     keep = [c for c in flagged.columns]
     return d.select(
         *keep,

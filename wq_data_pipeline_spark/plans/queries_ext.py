@@ -593,9 +593,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle-exact because the oracle SQL replicates the SAME md5
     hyperplanes (md5 hex is portable across engines), so the candidate
-    sets — not just the scores — match bit-for-bit. The O(n^2) exact
-    form stays available as ``similarity.exact_near_dup_pairs`` for
-    bounded-n validation/recall tests."""
+    sets — not just the scores — match bit-for-bit."""
     from wq_data_pipeline_spark.operators.similarity import rp_lsh_signature
 
     raw = load_table(spark, sf_dir, "embeddings")
@@ -672,7 +670,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Oracle: same md5-derived hyperplanes (parity of the first hex digit
-# of md5('<plane>:<dim>') -> ±1, exactly _pseudo_hyperplane_component),
+# of md5('<plane>:<dim>') -> ±1, exactly similarity.hyperplane_components),
 # same banding, same quantized cosine. Plane dots are BIGINT sums
 # (Spark's double fold over |q_i| <= 1e7 longs is exact), so the
 # sign — and hence every signature bit — matches bit-for-bit.
@@ -1036,107 +1034,6 @@ c0 AS (
          list_transform(q, x -> CAST(x AS DOUBLE)) AS c
   FROM q ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT ({k_sql})
 ),{",".join(rounds)},
-scored_c AS (
-  SELECT v.vec_id, v.q, c.cid,
-         {dots('v.q', 'c.c')} / (sqrt({sq('v.q')}) * sqrt({sq('c.c')})) AS cs
-  FROM q v CROSS JOIN {last} c
-),
-av AS (
-  SELECT vec_id, q, cid AS bucket FROM (
-    SELECT vec_id, q, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid ASC) AS rn
-    FROM scored_c
-  ) WHERE rn = 1
-)"""
-
-
-def _kmeans_banded_prefix_sql(k_sql: str, bands: int = 8) -> str:
-    """DuckDB WITH-prefix replaying the BANDED distributed trainer
-    (similarity._kmeans_distributed(banded=True)): same quantized
-    corpus / md5 seeds / integer-mean rounds as
-    :func:`_kmeans_prefix_sql`, but each round's assignment scores a
-    vector only against centroids sharing a random-hyperplane band
-    signature — vector signatures once up front, centroid signatures
-    re-derived per round from the ROUNDED means (integer plane dots,
-    so every bit matches the engine), vectors with no candidate sit
-    out that round's means. planes/band =
-    greatest(1, ceil(log2(k))) — the auto_planes_per_band law,
-    evaluated in-SQL so the oracle tracks the engine's runtime k.
-    Ends at ``av`` = every vector's final bucket via EXACT
-    assignment, the same final pass the consuming entries run."""
-    fold, dots, sq = _lr_fold, _lr_dots, _lr_sq
-    pl = "(SELECT pl FROM pp)"
-
-    def sig_cte(src: str, idc: str, vec: str) -> str:
-        return f"""
-  SELECT {idc}, p // {pl} AS band,
-         CAST(sum(CASE WHEN s > 0 THEN 1 << (p % {pl}) ELSE 0 END) AS BIGINT) AS sig
-  FROM (SELECT t.{idc}, pl2.p, sum(t.xi * pl2.h) AS s
-        FROM (SELECT {idc}, i, {vec}[i + 1] AS xi
-              FROM (SELECT {idc}, {vec}, unnest(generate_series(0, len({vec}) - 1)) AS i
-                    FROM {src})) t
-        JOIN planes pl2 ON t.i = pl2.i GROUP BY t.{idc}, pl2.p)
-  GROUP BY {idc}, p // {pl}"""
-
-    rounds = []
-    for r in range(1, _KM_ITERS + 1):
-        prev = f"c{r - 1}"
-        rounds.append(f"""
-cn{r} AS (
-  SELECT cid, list_transform(c, x -> CASE WHEN nn > 0 THEN x / nn ELSE 0.0 END) AS cn
-  FROM (SELECT cid, c, sqrt({sq('c')}) AS nn FROM {prev})
-),
-cq{r} AS (
-  SELECT cid, list_transform(c, x -> CAST(round(x) AS BIGINT)) AS cq FROM {prev}
-),
-csig{r} AS ({sig_cte(f'cq{r}', 'cid', 'cq')}),
-cand{r} AS (
-  SELECT DISTINCT v.vec_id, c.cid
-  FROM vsig v JOIN csig{r} c ON v.band = c.band AND v.sig = c.sig
-),
-a{r} AS (
-  SELECT vec_id, q, cid FROM (
-    SELECT vec_id, q, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid ASC) AS rn
-    FROM (SELECT v.vec_id, v.q, cn.cid, {dots('v.q', 'cn.cn')} AS cs
-          FROM cand{r} ca JOIN q v ON ca.vec_id = v.vec_id
-          JOIN cn{r} cn ON ca.cid = cn.cid)
-  ) WHERE rn = 1
-),
-m{r} AS (
-  SELECT cid, list(m ORDER BY pos) AS c FROM (
-    SELECT cid, pos, CAST(sum(x) AS DOUBLE) / count(*) AS m
-    FROM (SELECT cid, unnest(generate_series(1, len(q))) AS pos, unnest(q) AS x
-          FROM a{r})
-    GROUP BY cid, pos
-  ) GROUP BY cid
-),
-c{r} AS (
-  SELECT p.cid, coalesce(m{r}.c, p.c) AS c FROM {prev} p LEFT JOIN m{r} USING (cid)
-)""")
-    last = f"c{_KM_ITERS}"
-    return f"""
-WITH q AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_Q}) AS BIGINT)) AS q
-  FROM embeddings
-),
-kk AS (SELECT ({k_sql}) AS k),
-pp AS (SELECT greatest(1, CAST(ceil(log2(k)) AS INT)) AS pl FROM kk),
-c0 AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         list_transform(q, x -> CAST(x AS DOUBLE)) AS c
-  FROM q ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT (SELECT k FROM kk)
-),
-dims AS (SELECT unnest(generate_series(0, (SELECT max(len(q)) - 1 FROM q))) AS i),
-pls AS (SELECT unnest(generate_series(0, (SELECT {bands} * pl - 1 FROM pp))) AS p),
-planes AS (
-  SELECT pls.p, dims.i,
-         CASE WHEN substr(md5(CAST(pls.p AS VARCHAR) || ':' || CAST(dims.i AS VARCHAR)), 1, 1)
-                   IN ('0','2','4','6','8','a','c','e')
-              THEN 1 ELSE -1 END AS h
-  FROM pls CROSS JOIN dims
-),
-vsig AS ({sig_cte('q', 'vec_id', 'q')}),{",".join(rounds)},
 scored_c AS (
   SELECT v.vec_id, v.q, c.cid,
          {dots('v.q', 'c.c')} / (sqrt({sq('v.q')}) * sqrt({sq('c.c')})) AS cs

@@ -237,8 +237,8 @@ def q_embed_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Oracle: replay the md5 hyperplanes (parity of the first hex digit of
-# md5('<plane>:<dim>') -> ±1, exactly similarity._pseudo_hyperplane_
-# component), band p//PLANES, bit 1 << (p % PLANES); integer plane dots
+# md5('<plane>:<dim>') -> ±1, exactly similarity.hyperplane_
+# components), band p//PLANES, bit 1 << (p % PLANES); integer plane dots
 # make every signature bit — hence the candidate set — bit-identical,
 # and cosines are the established quantized-BIGINT form.
 SQL_EMBED_DECONTAMINATE = f"""

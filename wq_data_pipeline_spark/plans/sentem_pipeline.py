@@ -139,8 +139,6 @@ def run_sentemqc_plan(
                 flag_col=f"flag_run{i}",
                 top_col="qcband_top" if i == 5 else None,
                 bottom_col="qcband_bottom" if i == 5 else None,
-                # wide windows -> scale engines (prefix-sum mean, pandas median)
-                fast=True,
             )
             named[f"flag_run{i}"] = F.col(f"flag_run{i}")
         # pass-5 bands only where the support reaches minp (W15)
