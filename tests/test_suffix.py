@@ -40,17 +40,9 @@ def docs_df(spark):
     return spark.createDataFrame(DOCS, ["doc_id", "text"])
 
 
-def test_adjacent_lcp_matches_reference(spark):
-    """Per-document adjacency and capped LCPs equal the pure-Python
-    suffix sort, on the adversarial strings PLUS non-ASCII docs so both
-    the byte-sliced fast path and the char-indexed slow path of
-    suffix_window_keys are exercised."""
-    docs = DOCS + [
-        (7, "héllo wörld héllo wörld héllo"),  # slow path: multibyte
-        (8, "日本語のテキスト日本語のテキスト"),  # slow path: CJK, periodic
-        (9, "a"),  # single char: zero adjacency rows
-        (10, "cafécafé" * 12),  # slow path, periodic, 96 chars
-    ]
+def _check_doc_adjacent_lcp(spark, docs) -> None:
+    """doc_adjacent_lcp of docs equals the pure-Python suffix sort:
+    every adjacent pair once, its capped LCP, its document length."""
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     rows = doc_adjacent_lcp(df, "doc_id", "text", DEPTH).collect()
     got = {(r["doc_id"], r["prev_pos"], r["pos"]): r["lcp"] for r in rows}
@@ -63,6 +55,29 @@ def test_adjacent_lcp_matches_reference(spark):
     assert len(got) == sum(len(t) - 1 for _, t in docs)
     texts = dict(docs)
     assert all(r["n"] == len(texts[r["doc_id"]]) for r in rows)
+
+
+def test_adjacent_lcp_matches_reference(spark):
+    """Per-document adjacency and capped LCPs equal the pure-Python
+    suffix sort on the adversarial strings."""
+    _check_doc_adjacent_lcp(spark, DOCS)
+
+
+def test_doc_adjacent_lcp_parity_with_doubling(spark):
+    """The direct window form must give the rows the prefix-doubling
+    form gave — the pure-Python suffix sort — on the adversarial
+    strings PLUS non-ASCII docs, so both the byte-sliced fast path and
+    the char-indexed slow path of suffix_window_keys are exercised."""
+    _check_doc_adjacent_lcp(
+        spark,
+        DOCS
+        + [
+            (7, "héllo wörld héllo wörld héllo"),  # slow path: multibyte
+            (8, "日本語のテキスト日本語のテキスト"),  # slow path: CJK, periodic
+            (9, "a"),  # single char: zero adjacency rows
+            (10, "cafécafé" * 12),  # slow path, periodic, 96 chars
+        ],
+    )
 
 
 def _ref_global_pairs(docs, depth: int) -> dict:
