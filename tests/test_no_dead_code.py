@@ -1,6 +1,7 @@
-"""Dead-code guard: every top-level function and class of the package
-must be referenced by some ``.py`` file of the repository (library,
-tools, benchmarks, tests) outside its own body.
+"""Dead-code guard: every top-level function, class and upper-case
+constant of the package must be referenced by some ``.py`` file of the
+repository (library, tools, benchmarks, tests) outside its own
+definition.
 
 A reference is any use of the name: a bare name, an attribute, an
 import alias, or an identifier-shaped string literal (``getattr`` or
@@ -42,6 +43,21 @@ def _names(node: ast.AST, skip: ast.AST | None = None) -> set[str]:
     return out
 
 
+def _defined(node: ast.stmt) -> list[str]:
+    """Names a module-level statement defines that the guard checks:
+    functions, classes, and upper-case (constant) assignment targets."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    return [n for n in names if n.isupper()]
+
+
 def test_no_unreferenced_top_level_definitions():
     trees = {}
     for f in _py_files():
@@ -53,11 +69,10 @@ def test_no_unreferenced_top_level_definitions():
         if not f.startswith(PKG + os.sep):
             continue
         for node in t.body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            used = node.name in _names(t, skip=node) or any(
-                node.name in r for g, r in refs.items() if g != f
-            )
-            if not used:
-                dead.append(f"{os.path.relpath(f, ROOT)}:{node.lineno} {node.name}")
+            for name in _defined(node):
+                used = name in _names(t, skip=node) or any(
+                    name in r for g, r in refs.items() if g != f
+                )
+                if not used:
+                    dead.append(f"{os.path.relpath(f, ROOT)}:{node.lineno} {name}")
     assert not dead, "unreferenced top-level definitions:\n" + "\n".join(sorted(dead))

@@ -26,15 +26,11 @@ def series_df(spark):
 
 @pytest.mark.parametrize("w", [5, 12, 48])  # odd + both even cases
 def test_centered_mean_matches_pandas(spark, series_df, w):
-    from wq_data_pipeline_spark.operators.sentem import rolling_mean_std
+    from wq_data_pipeline_spark.operators.sentem import frame_mean_std
 
     sdf, pdf = series_df
-    out = (
-        rolling_mean_std(sdf, "value", w, KEYS, "ts")
-        .orderBy("ts")
-        .select("ma", "sd")
-        .toPandas()
-    )
+    ma, sd = frame_mean_std("value", w, KEYS, "ts", "mean")
+    out = sdf.select("ts", ma.alias("ma"), sd.alias("sd")).orderBy("ts").toPandas()
     import math
 
     minp = max(3, math.ceil(w * 0.3))
@@ -80,19 +76,11 @@ def test_var_samp_matches_pandas_ddof1(spark, series_df):
     assert np.allclose(out, exp, equal_nan=True, rtol=1e-9)
 
 
-def test_tri5_matches_reference_numpy(spark, series_df):
-    """tri5 vs a direct numpy transcription of the reference's
-    weighted mean/std semantics (scripts/sentemqc.py:31-39)."""
-    from wq_data_pipeline_spark.operators.sentem import TRI5_WEIGHTS, tri5_mean_std
+def _tri5_reference(v):
+    """Direct numpy transcription of the reference's tri5 weighted
+    mean/std (scripts/sentemqc.py:31-39)."""
+    from wq_data_pipeline_spark.operators.sentem import TRI5_WEIGHTS
 
-    sdf, pdf = series_df
-    out = (
-        tri5_mean_std(sdf, "value", KEYS, "ts")
-        .orderBy("ts")
-        .select("ma", "sd")
-        .toPandas()
-    )
-    v = pdf["value"].to_numpy()
     n = len(v)
     exp_ma = np.full(n, np.nan)
     exp_sd = np.full(n, np.nan)
@@ -109,6 +97,18 @@ def test_tri5_matches_reference_numpy(spark, series_df):
         m = (vals * wts).sum() / wts.sum()
         exp_ma[i] = m
         exp_sd[i] = np.sqrt((wts * (vals - m) ** 2).sum() / wts.sum())
+    return exp_ma, exp_sd
+
+
+def test_tri5_matches_reference_numpy(spark, series_df):
+    """tri5 vs a direct numpy transcription of the reference's
+    weighted mean/std semantics (scripts/sentemqc.py:31-39)."""
+    from wq_data_pipeline_spark.operators.sentem import tri5_mean_std
+
+    sdf, pdf = series_df
+    ma, sd = tri5_mean_std("value", KEYS, "ts")
+    out = sdf.select("ts", ma.alias("ma"), sd.alias("sd")).orderBy("ts").toPandas()
+    exp_ma, exp_sd = _tri5_reference(pdf["value"].to_numpy())
     assert np.allclose(out["ma"].to_numpy(), exp_ma, equal_nan=True, rtol=1e-12)
     assert np.allclose(out["sd"].to_numpy(), exp_sd, equal_nan=True, rtol=1e-9)
 
@@ -140,6 +140,54 @@ def test_full_sentemqc_pipeline(spark):
     assert all(r.flag_reason == "" for r in ok)
     # the bulk of a clean series must survive
     assert len(ok) > 0.9 * n
+
+
+def test_sentemqc_pass_flags_match_pandas(spark):
+    """apply_sentemqc's five ``flag_run{i}`` — the two 960-point mean
+    passes on one shared set of prefix sums, the 48-point median, the
+    5-point mean and tri5 — equal a per-pass pandas reference
+    (``rolling(center=True, min_periods)`` plus the band formula) on
+    series with NULL runs, non-positive values and spikes, two of them
+    shorter than 960 points and one shorter than the 960 windows'
+    min_periods."""
+    import math
+
+    from wq_data_pipeline_spark.operators.sentem import DEFAULT_PASSES, apply_sentemqc
+
+    rng = np.random.default_rng(23)
+    frames = []
+    for var, n in (("long", 1500), ("short", 700), ("tiny", 250)):
+        v = rng.normal(8.0, 0.4, n)
+        v[rng.choice(n, 12, replace=False)] *= 2.5  # spikes
+        v[rng.choice(n, 15, replace=False)] = np.nan
+        v[rng.choice(n, 10, replace=False)] = -1.0  # pre-masked
+        v[100:160] = np.nan  # NULL run
+        v[180:183] = 0.0
+        ts = pd.date_range("2024-01-01", periods=n, freq="15min")
+        frames.append(pd.DataFrame({"station": "s", "variable": var, "ts": ts, "value": v}))
+    pdf = pd.concat(frames, ignore_index=True)
+    runs = [f"flag_run{i}" for i in range(1, len(DEFAULT_PASSES) + 1)]
+    got = apply_sentemqc(spark.createDataFrame(pdf)).select("variable", "ts", *runs).toPandas()
+    for var, g in pdf.groupby("variable"):
+        out = got[got["variable"] == var].sort_values("ts")
+        s = g.sort_values("ts")["value"].where(lambda x: x > 0).reset_index(drop=True)
+        for name, cfg in zip(runs, DEFAULT_PASSES):
+            if cfg.stat == "tri5":
+                ma, sd = _tri5_reference(s.to_numpy())
+            else:
+                minp = max(3, math.ceil(cfg.window * 0.3))
+                r = s.rolling(cfg.window, center=True, min_periods=minp)
+                ma = (r.median() if cfg.stat == "median" else r.mean()).to_numpy()
+                sd = r.std(ddof=0).to_numpy()
+            top = ma + cfg.top_add + cfg.scale * sd
+            bottom = ma - cfg.bottom_sub - cfg.scale * sd
+            hi = s.to_numpy() * (1.0 + cfg.unc_pct)
+            lo = s.to_numpy() * (1.0 - cfg.unc_pct)
+            with np.errstate(invalid="ignore"):
+                flagged = ((hi > top) & (lo > top)) | ((hi < bottom) & (lo < bottom))
+            exp = np.where(flagged, 200, 100)
+            np.testing.assert_array_equal(out[name].to_numpy(), exp, err_msg=f"{var} {name}")
+        assert var == "tiny" or (out["flag_run1"] == 200).any(), var
 
 
 def test_flags_monotone_property(spark, series_df):

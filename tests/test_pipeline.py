@@ -29,25 +29,33 @@ def fixture_csv(tmp_path_factory):
     return str(p)
 
 
+RANGE_MAP = {"o2": (0.0, 40.0), "ph": (0.0, 13.0)}
+
+
 @pytest.fixture(scope="module")
-def built(spark, fixture_csv):
+def readings(spark, fixture_csv):
+    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
+
+    wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
+    return melt_wide(wide, ["o2", "ph"], station_col="station")
+
+
+@pytest.fixture(scope="module")
+def built(spark, readings):
     """``run_qc_pipeline`` on the fixture, plus what its construction
     ran (jobs, and the physical plan of each SQL execution behind them)
     and the persisted RDD ids that existed before it."""
     from types import SimpleNamespace
 
     from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
-    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
 
-    wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
-    long = melt_wide(wide, ["o2", "ph"], station_col="station")
-    cfg = QCConfig(range_map={"o2": (0.0, 40.0), "ph": (0.0, 13.0)}, z_thresh=6.0)
+    cfg = QCConfig(range_map=RANGE_MAP, z_thresh=6.0)
     sc = spark.sparkContext
     persisted_before = set(sc._jsc.getPersistentRDDs().keySet())
     group = "qc-pipeline-construction"
     sc.setJobGroup(group, "")
     try:
-        out = run_qc_pipeline(long, cfg)
+        out = run_qc_pipeline(readings, cfg)
     finally:
         sc.setJobGroup("", "")
     jobs = list(sc.statusTracker().getJobIdsForGroup(group))
@@ -68,8 +76,8 @@ def outputs(built):
 
 
 def _nodes_outside_cache(plan):
-    """Node names of an executed plan, not descending into a cached
-    relation's build plan (InMemoryTableScan's inner child)."""
+    """Node names of a plan (executed, or logical), not descending into
+    a cached relation's build plan (InMemoryTableScan's inner child)."""
     name = plan.nodeName()
     yield name
     if name == "InMemoryTableScan":
@@ -107,6 +115,30 @@ def test_pipeline_runs_each_stage_once(built):
             name,
             nodes,
         )
+
+
+def test_flag_table_plan_shape(spark, readings):
+    """Full suite: the flag + SentemQC table runs the robust-z pandas
+    UDF once (the window detectors read the cleaned frame, not the
+    UDF's output, and isolated groups window over each island instead
+    of joining an aggregate of the frame) and holds at most 18 Window
+    nodes: one per window dependency level, the SentemQC passes sharing
+    theirs. The cleaned table is a local relation here, so every node
+    counted belongs to the flag table."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import (
+        QCConfig,
+        clean_stage,
+        flag_stage,
+        sentem_stage,
+    )
+
+    cfg = QCConfig(range_map=RANGE_MAP, z_thresh=6.0, full_suite=True)
+    cleaned = clean_stage(readings, cfg)
+    cleaned = spark.createDataFrame(cleaned.collect(), cleaned.schema)
+    plan = sentem_stage(flag_stage(cleaned, cfg))._jdf.queryExecution().optimizedPlan()
+    nodes = list(_nodes_outside_cache(plan))
+    assert sum(n.startswith("FlatMapGroupsIn") for n in nodes) == 1, nodes
+    assert nodes.count("Window") <= 18, nodes
 
 
 def test_sentinels_masked(outputs):

@@ -144,8 +144,9 @@ def test_prefix_rolling_matches_direct(spark):
     from pyspark.sql import functions as F
 
     from wq_data_pipeline_spark.operators.sentem import (
-        rolling_mean_std,
-        rolling_mean_std_prefix,
+        frame_mean_std,
+        prefix_mean_std,
+        prefix_sums,
     )
 
     rng = np.random.default_rng(5)
@@ -156,15 +157,13 @@ def test_prefix_rolling_matches_direct(spark):
     v[::97] = np.nan  # scattered nulls
     pdf = pd.DataFrame({"station": "s", "variable": "x", "ts": ts, "value": v})
     df = spark.createDataFrame(pdf)
+    keys = ["station", "variable"]
+    pre = df.withColumns(prefix_sums("value", keys, "ts"))
     for w in (48, 960):
-        a = (
-            rolling_mean_std(df, "value", w, ma_col="ma", sd_col="sd")
-            .orderBy("ts").select("ma", "sd").toPandas()
-        )
-        b = (
-            rolling_mean_std_prefix(df, "value", w, ma_col="ma", sd_col="sd")
-            .orderBy("ts").select("ma", "sd").toPandas()
-        )
+        ma, sd = frame_mean_std("value", w, keys, "ts", "mean")
+        a = df.select("ts", ma.alias("ma"), sd.alias("sd")).orderBy("ts").toPandas()
+        ma, sd = prefix_mean_std(w, keys, "ts")
+        b = pre.select("ts", ma.alias("ma"), sd.alias("sd")).orderBy("ts").toPandas()
         assert a["ma"].isna().equals(b["ma"].isna()), f"minp mask differs at w={w}"
         np.testing.assert_allclose(a["ma"], b["ma"], rtol=1e-9, atol=1e-9, equal_nan=True)
         np.testing.assert_allclose(a["sd"], b["sd"], rtol=1e-7, atol=1e-9, equal_nan=True)

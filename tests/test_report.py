@@ -80,8 +80,9 @@ def test_downsample_is_bounded(qc_outputs):
 def test_sentemqc_combined_figure(spark, tmp_path):
     from wq_data_pipeline_spark.operators.sentem import (
         BandPassCfg,
-        apply_band_pass,
         apply_sentemqc,
+        band_pass,
+        with_band_stats,
     )
     from wq_data_pipeline_spark.report import render_sentemqc_figure
 
@@ -96,9 +97,9 @@ def test_sentemqc_combined_figure(spark, tmp_path):
     df = spark.createDataFrame(pdf)
     sq = apply_sentemqc(df)
     cfg = BandPassCfg(window=33, scale=3.0, stat="median")
-    sq = apply_band_pass(
-        sq, cfg, "value", top_col="qcband_top", bottom_col="qcband_bottom"
-    )
+    sq = with_band_stats(sq, [cfg], "value", ["station", "variable"], "ts")
+    _, top, bottom = band_pass(cfg, "value", 1)
+    sq = sq.withColumns({"qcband_top": top, "qcband_bottom": bottom})
     p = render_sentemqc_figure(sq, str(tmp_path), "stnA", "nitrate", max_points=250)
     assert os.path.exists(p)
     _assert_valid_svg(p)

@@ -1,16 +1,18 @@
 """Artefact/outlier detectors (SURVEY.md §2.4 W4-W11, §2.2 P7/P14).
 
 Each detector is a lazy transformation producing either per-row flag
-columns or small event tables (gaps-and-islands aggregation). No UDFs:
-everything is Column algebra + window aggregates, so the whole suite
-codegens and collapses onto one sort per series.
+columns or small event tables (gaps-and-islands aggregation). Apart
+from robust-z's ``engine='pandas'`` path, no UDFs: everything is Column
+algebra + window aggregates, so the suite codegens; window functions
+over the per-series order share a Window node per dependency level
+(see operators/windows.py).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from wq_data_pipeline_spark.operators.windows import (
     SERIES_KEYS,
@@ -386,39 +388,29 @@ def detect_isolated_groups(
     ``a>0 and big_gap[a]`` / ``b+1<len and big_gap[b+1]`` — a run at
     the series start/end has no measurable gap on that side and is
     NEVER flagged; a NULL neighbor timestamp here therefore fails the
-    gap test. Implementation: islands of non-nullness; per-island
-    first/last ts plus the neighboring rows' timestamps across the
-    island boundary, then flag whole islands. Returns the input rows
-    + boolean ``out``.
+    gap test. Implementation: islands of non-nullness; a window over
+    each island ((keys, island id), no order) gives its size, first/
+    last ts and the neighboring rows' timestamps across the island
+    boundary, then flags whole islands. Hash partitioning on ``keys``
+    already satisfies that window, so it adds a sort, no exchange and
+    no re-read of ``df``. Returns the input rows + boolean ``out``.
     """
     w = ordered(keys, ts)
+    isl = Window.partitionBy(*keys, "_isl")
     finite = F.col(value).isNotNull()
-    d = with_islands(df.withColumn("_fin", finite), "_fin", keys, ts, out="_isl")
-    d = d.withColumn("_prev_ts", F.lag(ts).over(w)).withColumn("_next_ts", F.lead(ts).over(w))
-    isl = (
-        d.filter(F.col("_fin"))
-        .groupBy(*keys, "_isl")
-        .agg(
-            F.count(F.lit(1)).alias("_npts"),
-            F.min(ts).alias("_first_ts"),
-            F.max(ts).alias("_last_ts"),
-            F.min_by("_prev_ts", ts).alias("_before_ts"),
-            F.max_by("_next_ts", ts).alias("_after_ts"),
-        )
+    d = with_islands(df, finite, keys, ts, out="_isl")
+    first_ts = F.min(ts).over(isl)
+    last_ts = F.max(ts).over(isl)
+    before_ts = F.min_by(F.lag(ts).over(w), ts).over(isl)
+    after_ts = F.max_by(F.lead(ts).over(w), ts).over(isl)
+    gap_before = before_ts.isNotNull() & (
+        (F.unix_micros(first_ts) - F.unix_micros(before_ts)) / 1e6 > min_gap_seconds
     )
-    gap_before = F.col("_before_ts").isNotNull() & (
-        (F.unix_micros("_first_ts") - F.unix_micros("_before_ts")) / 1e6 > min_gap_seconds
+    gap_after = after_ts.isNotNull() & (
+        (F.unix_micros(after_ts) - F.unix_micros(last_ts)) / 1e6 > min_gap_seconds
     )
-    gap_after = F.col("_after_ts").isNotNull() & (
-        (F.unix_micros("_after_ts") - F.unix_micros("_last_ts")) / 1e6 > min_gap_seconds
-    )
-    flagged = isl.withColumn(
-        "_isolated", (F.col("_npts") <= max_group_points) & gap_before & gap_after
-    ).select(*keys, "_isl", "_isolated")
-    res = d.join(flagged, on=[*keys, "_isl"], how="left")
-    return res.withColumn(
-        out, F.coalesce(F.col("_fin") & F.col("_isolated"), F.lit(False))
-    ).drop("_fin", "_isl", "_isolated", "_prev_ts", "_next_ts")
+    isolated = (F.count(F.lit(1)).over(isl) <= max_group_points) & gap_before & gap_after
+    return d.withColumn(out, F.coalesce(finite & isolated, F.lit(False))).drop("_isl")
 
 
 def merge_flags(*flags: Column) -> Column:

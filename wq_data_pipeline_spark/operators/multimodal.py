@@ -19,15 +19,6 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

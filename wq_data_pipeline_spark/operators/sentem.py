@@ -9,12 +9,17 @@ Design notes:
   expression, NOT a window aggregate: a fixed expression tree is
   evaluated identically by any engine (deterministic fp), and it
   codegens without a sort-based frame scan.
+- Passes are Column builders, not DataFrame transforms:
+  :func:`with_band_stats` emits every pass's center and std in one
+  projection (the wide mean passes sharing one set of prefix sums),
+  and :func:`band_pass` builds a pass's bands and flag over them.
 - Flags use the reference's 100=OK / 200=flagged codes
   (scripts/sentemqc.py:41-54).
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 from dataclasses import dataclass
 
@@ -77,79 +82,80 @@ def nitrate_to_n(value: str | Column) -> Column:
     return v * F.lit(NITRATE_NO3_TO_N)
 
 
-def rolling_mean_std(
-    df: DataFrame,
-    value: str = "value",
-    window: int = 48,
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    stat: str = "mean",
-    minp: int | None = None,
-    ma_col: str = "ma",
-    sd_col: str = "sd",
-) -> DataFrame:
+def min_periods(window: int) -> int:
+    """pandas ``min_periods`` of a band window: max(3, ceil(w·MINFRAC))
+    with the reference's MINFRAC = 0.3 (scripts/sentemqc.py:24-30)."""
+    return max(3, math.ceil(window * 0.3))
+
+
+def frame_mean_std(
+    value: str,
+    window: int,
+    keys: Sequence[str],
+    ts: str,
+    stat: str,
+) -> tuple[Column, Column]:
     """W12: centered rolling mean (or exact median) + POPULATION std
     with pandas min_periods = max(3, ceil(w*0.3)) (reference
-    rolling_mean_std_basic, scripts/sentemqc.py:25-30; std ddof=0)."""
-    import math
-
-    if minp is None:
-        minp = max(3, math.ceil(window * 0.3))
+    rolling_mean_std_basic, scripts/sentemqc.py:25-30; std ddof=0),
+    as direct window frames: bit-exact, but WindowExec re-scans the
+    frame per row (O(n·w))."""
+    minp = min_periods(window)
     frame = centered(window, keys, ts)
     if stat == "median":
         center = F.percentile(F.col(value), F.lit(0.5)).over(frame)
     else:
         center = F.avg(value).over(frame)
     sd = F.stddev_pop(value).over(frame)
-    return df.withColumn(
-        ma_col, guard_min_periods(center, value, frame, minp)
-    ).withColumn(sd_col, guard_min_periods(sd, value, frame, minp))
+    return (
+        guard_min_periods(center, value, frame, minp),
+        guard_min_periods(sd, value, frame, minp),
+    )
 
 
-def rolling_mean_std_prefix(
-    df: DataFrame,
-    value: str = "value",
-    window: int = 960,
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    minp: int | None = None,
-    ma_col: str = "ma",
-    sd_col: str = "sd",
-) -> DataFrame:
-    """O(n) rolling mean + population std via prefix sums — the scale
-    path for wide windows.
+def prefix_sums(value: str, keys: Sequence[str], ts: str) -> dict[str, Column]:
+    """Helper columns of the prefix-sum form over ``value``, for
+    ``df.withColumns``: the series anchor ``_anchor`` and the running
+    count / sum / sum-of-squares of anchor-centered values ``_cc`` /
+    ``_cs`` / ``_cs2``. They do not depend on the window width, so
+    every :func:`prefix_mean_std` pass over the same series shares one
+    set.
 
-    Spark's WindowExec evaluates a sliding ROWS frame by re-scanning
-    the frame per row: O(n·w) — measured 64 s for ONE 1M-row series at
-    w=960 vs 6.7 s at w=48 (the pandas reference's rolling sums are
-    O(n)). Here the frame aggregate telescopes out of three RUNNING
-    windows (count / sum / sum-of-squares of anchor-centered values)
-    combined with lead/lag at the frame edges — O(n) total, one sort.
-
-    Numerical note: contributions are centered on the series' first
-    non-null value before accumulating, so the prefix subtraction
-    cancels ~zero-mean partial sums (double precision error ~1e-12
-    relative in practice, vs bit-exact direct frames). Use
-    :func:`rolling_mean_std` where results feed a bit-exact
-    cross-engine comparison; use this in the pipeline hot path.
-    """
-    import math
-
-    if minp is None:
-        minp = max(3, math.ceil(window * 0.3))
-    lo, hi = centered_bounds(window)
+    Contributions are centered on the series' first non-null value
+    before accumulating, so the prefix subtraction cancels ~zero-mean
+    partial sums (double precision error ~1e-12 relative in practice,
+    vs bit-exact direct frames)."""
     w_ord = ordered(keys, ts)
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_all = w_ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     v = F.col(value)
     anchor = F.first(v, ignorenulls=True).over(w_run)
     contrib = F.when(v.isNotNull(), v - anchor).otherwise(F.lit(0.0))
-    d = (
-        df.withColumn("_anchor", F.first(v, ignorenulls=True).over(w_all))
-        .withColumn("_cc", F.sum(v.isNotNull().cast("long")).over(w_run))
-        .withColumn("_cs", F.sum(contrib).over(w_run))
-        .withColumn("_cs2", F.sum(contrib * contrib).over(w_run))
-    )
+    return {
+        "_anchor": F.first(v, ignorenulls=True).over(w_all),
+        "_cc": F.sum(v.isNotNull().cast("long")).over(w_run),
+        "_cs": F.sum(contrib).over(w_run),
+        "_cs2": F.sum(contrib * contrib).over(w_run),
+    }
+
+
+def prefix_mean_std(window: int, keys: Sequence[str], ts: str) -> tuple[Column, Column]:
+    """O(n) centered rolling mean + population std (same min_periods as
+    :func:`frame_mean_std`) from the :func:`prefix_sums` columns, which
+    must already be on the frame — the scale path for wide windows.
+
+    Spark's WindowExec evaluates a sliding ROWS frame by re-scanning
+    the frame per row: O(n·w) — measured 64 s for ONE 1M-row series at
+    w=960 vs 6.7 s at w=48 (the pandas reference's rolling sums are
+    O(n)). Here the frame aggregate telescopes out of the running
+    prefix columns combined with lead/lag at the frame edges — O(n)
+    total. The anchor, the running sums and the edge lookups are three
+    window dependency levels, so three Window nodes over the one
+    (keys, ts) sort."""
+    minp = min_periods(window)
+    lo, hi = centered_bounds(window)
+    w_ord = ordered(keys, ts)
+    w_all = w_ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     def windowed(cum: str, zero):
         upper = F.coalesce(
@@ -167,35 +173,31 @@ def rolling_mean_std_prefix(
         F.lit(0.0),
     )
     ok = c >= minp
-    return d.withColumn(ma_col, F.when(ok, mean)).withColumn(
-        sd_col, F.when(ok, F.sqrt(var))
-    ).drop("_anchor", "_cc", "_cs", "_cs2")
+    return F.when(ok, mean), F.when(ok, F.sqrt(var))
 
 
 # WindowExec frame scans are O(n·w); beyond this width the prefix-sum
 # form wins decisively (measured crossover well below 128 at 1M rows)
 PREFIX_WINDOW_THRESHOLD = 128
 
+
+def uses_prefix(cfg: BandPassCfg) -> bool:
+    """The engine follows the window width: MEAN windows of
+    PREFIX_WINDOW_THRESHOLD points or more run the O(n) prefix-sum
+    form, every other window (all medians included) the frame engine."""
+    return cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD
+
+
 TRI5_WEIGHTS = (1.0, 2.0, 3.0, 2.0, 1.0)
 
 
-def tri5_mean_std(
-    df: DataFrame,
-    value: str = "value",
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    ma_col: str = "ma",
-    sd_col: str = "sd",
-    min_finite: int = 3,
-) -> DataFrame:
+def tri5_mean_std(value: str, keys: Sequence[str], ts: str) -> tuple[Column, Column]:
     """W13: triangular-weighted 5-point mean/std, weights [1,2,3,2,1]
     over taps -2..+2, renormalized over the finite taps, >= 3 finite
     required (reference rolling_mean_std_tri5, scripts/sentemqc.py:31-39).
 
     Pure lag/lead tap algebra — one expression tree, no frame scan.
     """
-    from wq_data_pipeline_spark.operators.windows import ordered
-
     w = ordered(keys, ts)
     taps = [
         (F.lag(value, 2).over(w), TRI5_WEIGHTS[0]),
@@ -215,10 +217,8 @@ def tri5_mean_std(
     )
     m = sx / wsum
     var = sxx / wsum - m * m
-    ok = n_fin >= min_finite
-    return df.withColumn(ma_col, F.when(ok, m)).withColumn(
-        sd_col, F.when(ok, F.sqrt(F.greatest(var, F.lit(0.0))))
-    )
+    ok = n_fin >= 3
+    return F.when(ok, m), F.when(ok, F.sqrt(F.greatest(var, F.lit(0.0))))
 
 
 def band_columns(
@@ -299,44 +299,49 @@ def flag_reasons(named_flags: dict[str, Column]) -> Column:
     return F.trim(F.concat_ws(" ", *parts))
 
 
-def apply_band_pass(
-    df: DataFrame,
-    cfg: BandPassCfg,
-    value: str = "value",
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    flag_col: str = "flag_band",
-    top_col: str | None = None,
-    bottom_col: str | None = None,
-) -> DataFrame:
-    """One full band pass: center/std -> bands -> overlap flag.
-    Optionally materializes the band columns (run 5 exports them,
-    scripts/sentemqc.py:105-111).
-
-    The engine follows the window width: MEAN windows of
-    PREFIX_WINDOW_THRESHOLD points or more run the O(n) prefix-sum
-    form, every other window (all medians included) the frame
-    engine."""
+def pass_mean_std(
+    cfg: BandPassCfg, value: str, keys: Sequence[str], ts: str
+) -> tuple[Column, Column]:
+    """Center and std of one pass: tri5 taps, the prefix-sum form where
+    :func:`uses_prefix` (reading the :func:`prefix_sums` columns of
+    ``value``), else direct frames."""
     if cfg.stat == "tri5":
-        d = tri5_mean_std(df, value, keys, ts, ma_col="_ma", sd_col="_sd")
-    elif cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
-        d = rolling_mean_std_prefix(
-            df, value, cfg.window, keys, ts, ma_col="_ma", sd_col="_sd"
-        )
-    else:
-        d = rolling_mean_std(
-            df, value, cfg.window, keys, ts, stat=cfg.stat, ma_col="_ma", sd_col="_sd"
-        )
-    top, bottom = band_columns("_ma", "_sd", cfg)
-    d = d.withColumn("_top", top).withColumn("_bottom", bottom)
-    d = d.withColumn(
-        flag_col, uncertainty_overlap_flag(value, "_top", "_bottom", cfg)
-    )
-    if top_col:
-        d = d.withColumn(top_col, F.col("_top"))
-    if bottom_col:
-        d = d.withColumn(bottom_col, F.col("_bottom"))
-    return d.drop("_ma", "_sd", "_top", "_bottom")
+        return tri5_mean_std(value, keys, ts)
+    if uses_prefix(cfg):
+        return prefix_mean_std(cfg.window, keys, ts)
+    return frame_mean_std(value, cfg.window, keys, ts, cfg.stat)
+
+
+def with_band_stats(
+    df: DataFrame,
+    passes: Sequence[BandPassCfg],
+    value: str,
+    keys: Sequence[str],
+    ts: str,
+) -> DataFrame:
+    """``df`` plus every pass's center and std as ``_ma{i}`` /
+    ``_sd{i}`` (i from 1), in two projections: the prefix sums that
+    every prefix-sum pass shares (when any pass needs them), then all
+    passes' statistics — one window level over them.
+
+    The statistics are materialized rather than inlined into the band
+    flags: each flag reads its center and std four times, and inlined
+    copies multiply the generated code (~2.4x for the QC pipeline's
+    SentemQC stage) and the JVM CPU spent compiling and running it."""
+    if any(uses_prefix(p) for p in passes):
+        df = df.withColumns(prefix_sums(value, keys, ts))
+    stats = {}
+    for i, p in enumerate(passes, start=1):
+        stats[f"_ma{i}"], stats[f"_sd{i}"] = pass_mean_std(p, value, keys, ts)
+    return df.withColumns(stats)
+
+
+def band_pass(cfg: BandPassCfg, value: str, i: int) -> tuple[Column, Column, Column]:
+    """Pass ``i``'s bands and overlap flag over the :func:`with_band_stats`
+    columns. Returns ``(flag, top, bottom)``; run 5 also exports its
+    bands (scripts/sentemqc.py:105-111)."""
+    top, bottom = band_columns(f"_ma{i}", f"_sd{i}", cfg)
+    return uncertainty_overlap_flag(value, top, bottom, cfg), top, bottom
 
 
 def apply_sentemqc(
@@ -351,19 +356,26 @@ def apply_sentemqc(
     (scripts/sentemqc.py:80-114): pre-mask -> per-pass band flags ->
     combined flag + reasons + masked value. Returns the input plus
     ``flag_run{i}``, ``flag_sensor``, ``flag_global``, ``is_flagged``,
-    ``flag_reason``, ``value_masked``."""
+    ``flag_reason``, ``value_masked``.
+
+    Five projections: the pre-mask, the shared prefix sums, every
+    pass's center and std, every pass's flag, and the combination."""
     d = df.withColumn(value, premask_nonpositive(value))
-    named: dict[str, Column] = {}
-    for i, cfg in enumerate(passes, start=1):
-        d = apply_band_pass(d, cfg, value, keys, ts, flag_col=f"flag_run{i}")
-        named[f"flag_run{i}"] = F.col(f"flag_run{i}")
+    d = with_band_stats(d, passes, value, keys, ts)
+    named = {
+        f"flag_run{i}": band_pass(p, value, i)[0] for i, p in enumerate(passes, start=1)
+    }
     if sensor_code is not None:
-        d = d.withColumn("flag_sensor", sensor_error_flag(value, sensor_code))
-        named["flag_sensor"] = F.col("flag_sensor")
-    d = d.withColumn("flag_global", combine_flags_200(*named.values()))
-    d = d.withColumn("is_flagged", F.col("flag_global") == 200)
-    d = d.withColumn("flag_reason", flag_reasons(named))
-    d = d.withColumn(
-        "value_masked", F.when(F.col("is_flagged"), None).otherwise(F.col(value))
+        named["flag_sensor"] = sensor_error_flag(value, sensor_code)
+    d = d.withColumns(named)
+    flags = {name: F.col(name) for name in named}
+    glob = combine_flags_200(*flags.values())
+    is_flagged = glob == 200
+    return d.select(
+        *df.columns,
+        *flags.values(),
+        glob.alias("flag_global"),
+        is_flagged.alias("is_flagged"),
+        flag_reasons(flags).alias("flag_reason"),
+        F.when(is_flagged, None).otherwise(F.col(value)).alias("value_masked"),
     )
-    return d

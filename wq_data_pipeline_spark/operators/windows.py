@@ -3,8 +3,12 @@ windows, pandas-exact centered rows frames, min_periods guards, lag
 diffs, and gaps-and-islands ids.
 
 Scale notes:
-- All windows share the same (partitionBy, orderBy) so Catalyst
-  collapses them into a single WindowExec (one sort, one pass).
+- The windows share one (partitionBy, orderBy), so they share one
+  sort; Catalyst puts the window functions of one projection with the
+  same spec into one Window node and collapses adjacent independent
+  ones. A window over another window's output (lag of a flag, then a
+  running sum) is a new dependency level: one Window node per level,
+  each a pass over the sorted rows.
 - One (station, variable) series = one partition. At 100 TB a single
   series can exceed an executor; ``bucketed`` variants (time-bucket
   salting with halo rows for centered frames) are the scale path —

@@ -78,19 +78,17 @@ def clean_stage(readings: DataFrame, cfg: QCConfig) -> DataFrame:
 
 
 def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
-    """Fallback flag suite (apply_saqc_suite semantics, :459-589):
-    range + missing + robust-z (+ jumps) OR-combined to 0/255."""
+    """Fallback flag suite (apply_saqc_suite semantics, :459-589),
+    OR-combined to 0/255: robust-z and missing; range when
+    ``range_map`` is set; jumps when ``jump_thresh`` is set or under
+    ``full_suite`` (then 5.0 unless set); and with ``full_suite`` also
+    constants/plateau (flat runs), variance and isolated groups.
+
+    The window detectors run first, straight from the cleaned frame,
+    and are OR-ed into one column; the robust-z pandas UDF runs last,
+    once, and passes every column through."""
     d = cleaned.withColumnRenamed("clean", "value")
-    # engine='pandas': skiplist rolling median beats WindowExec's
-    # per-row frame scan ~38x at w=96 (pipeline hot path; the
-    # oracle-gated catalog queries keep the pure-JVM window engine).
-    # It needs executor/driver memory sized for Arrow group batches
-    # (a 1 GB local driver OOMs around 1M rows).
-    d = D.flag_robust_z(
-        d, "value", cfg.z_window_points, cfg.z_thresh, KEYS, "ts", out="f_z",
-        engine="pandas",
-    )
-    flags = [F.col("f_z"), D.flag_missing("value")]
+    flags = [D.flag_missing("value")]
     if cfg.range_map:
         range_expr = F.lit(False)
         for var, (lo, hi) in cfg.range_map.items():
@@ -128,7 +126,7 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
         d = d.join(F.broadcast(runs), cond, "left").drop(
             *[f"_r_{k}" for k in KEYS], "_rs", "_re"
         )
-        flags.append(F.coalesce(F.col("_in_flat"), F.lit(False)))
+        flags.append(F.col("_in_flat"))
         # variance ('6h', 1e-12)
         flags.append(
             D.flag_variance("value", cfg.var_window_points, KEYS, "ts", cfg.var_tol)
@@ -145,12 +143,25 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
         )
         flags.append(F.col("_isolated_flag"))
         # unilof: the reference fallback delegates to zscore('24h', 4.0)
-        # (:455-457) == the f_z flag already in ``flags`` — OR-idempotent.
-    combined = D.merge_flags(*flags)
-    d = d.withColumn("saqc_flag", D.flags_to_code(combined))
-    d = d.withColumn("accepted", F.when(combined, None).otherwise(F.col("value")))
-    d = d.drop("_in_flat", "_isolated_flag")
-    return d.withColumnRenamed("value", "clean")
+        # (:455-457) == the f_z flag below — OR-idempotent.
+    cols = ["value" if c == "clean" else c for c in cleaned.columns]
+    d = d.select(*cols, D.merge_flags(*flags).alias("_flags"))
+    # engine='pandas': skiplist rolling median beats WindowExec's
+    # per-row frame scan ~38x at w=96 (pipeline hot path; the
+    # oracle-gated catalog queries keep the pure-JVM window engine).
+    # It needs executor/driver memory sized for Arrow group batches
+    # (a 1 GB local driver OOMs around 1M rows).
+    d = D.flag_robust_z(
+        d, "value", cfg.z_window_points, cfg.z_thresh, KEYS, "ts", out="f_z",
+        engine="pandas",
+    )
+    combined = D.merge_flags(F.col("f_z"), F.col("_flags"))
+    return d.select(
+        *[F.col("value").alias("clean") if c == "clean" else c for c in cleaned.columns],
+        "f_z",
+        D.flags_to_code(combined).alias("saqc_flag"),
+        F.when(combined, None).otherwise(F.col("value")).alias("accepted"),
+    )
 
 
 def event_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
@@ -218,12 +229,11 @@ def sentem_stage(flagged: DataFrame) -> DataFrame:
     from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
 
     d = flagged.withColumn("_sv", F.col("clean"))
-    # the 960-point mean windows run the O(n) prefix-sum form; the
-    # 48-point median pass stays on the frame engine
+    # the two 960-point mean passes share one set of O(n) prefix sums;
+    # the 48-point median pass stays on the frame engine
     d = apply_sentemqc(d, value="_sv", keys=KEYS, ts="ts")
-    keep = [c for c in flagged.columns]
     return d.select(
-        *keep,
+        *flagged.columns,
         F.col("value_masked").alias("sm_masked"),
         F.col("is_flagged").alias("sm_flagged"),
         F.col("flag_reason").alias("sm_flagreason"),

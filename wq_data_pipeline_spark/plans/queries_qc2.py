@@ -369,7 +369,8 @@ def q_w13_tri5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W13: tri5 weighted mean/std through the library's tap algebra —
     a fixed expression tree is bit-deterministic cross-engine."""
     d = _events_clean(spark, sf_dir)
-    d = SM.tri5_mean_std(d, "value", KEY, "ts", ma_col="tri_ma", sd_col="tri_sd")
+    ma, sd = SM.tri5_mean_std("value", KEY, "ts")
+    d = d.withColumns({"tri_ma": ma, "tri_sd": sd})
     return d.select("event_type", _us().alias("ts_us"), "tri_ma", "tri_sd")
 
 

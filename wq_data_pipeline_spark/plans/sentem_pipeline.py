@@ -14,7 +14,6 @@ unions them — every series still computes distributed, partitioned by
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -24,15 +23,19 @@ from wq_data_pipeline_spark.functions.scalars import sanitize_name
 from wq_data_pipeline_spark.operators.sentem import (
     NITRATE_NO3_TO_N,
     BandPassCfg,
-    apply_band_pass,
+    band_pass,
     band_support_mask,
+    calibration_offset,
     combine_flags_200,
     flag_reasons,
+    min_periods,
+    nitrate_to_n,
+    premask_nonpositive,
     sensor_error_flag,
+    with_band_stats,
 )
 
 KEYS = ["station", "variable"]
-MINFRAC = 0.3  # reference MINFRAC, scripts/sentemqc.py:24
 
 
 @dataclass(frozen=True)
@@ -124,41 +127,41 @@ def run_sentemqc_plan(
         d = readings.filter(F.col("variable") == v.variable)
         if start_time is not None and end_time is not None:
             d = d.filter((F.col(ts) >= start_time) & (F.col(ts) <= end_time))
-        d = d.withColumn("obs_in", F.col("value") + F.lit(v.calibration_offset))
-        mask_pre = F.col("obs_in").isNull() | (F.col("obs_in") <= 0)
-        d = d.withColumn("mask_pre", mask_pre)
-        d = d.withColumn("obs_raw", F.when(~mask_pre, F.col("obs_in")))
-        obs = F.col("obs_raw") * F.lit(NITRATE_NO3_TO_N) if v.is_nitrate else F.col("obs_raw")
-        d = d.withColumn("_obs", obs)
+        obs_in = calibration_offset("value", v.calibration_offset)
+        obs_raw = premask_nonpositive(obs_in)
+        obs = nitrate_to_n(obs_raw) if v.is_nitrate else obs_raw
+        d = d.withColumns({"obs_in": obs_in, "obs_raw": obs_raw, "_obs": obs})
 
-        named: dict[str, F.Column] = {"flag_sensor": sensor_error_flag("_obs", v.code)}
         passes = passes_from_code_config(cfg)
-        for i, p in enumerate(passes, start=1):
-            d = apply_band_pass(
-                d, p, "_obs", KEYS, ts,
-                flag_col=f"flag_run{i}",
-                top_col="qcband_top" if i == 5 else None,
-                bottom_col="qcband_bottom" if i == 5 else None,
-            )
-            named[f"flag_run{i}"] = F.col(f"flag_run{i}")
-        # pass-5 bands only where the support reaches minp (W15)
-        minp5 = max(3, math.ceil(cfg["w5"] * MINFRAC))
-        sup = band_support_mask("_obs", cfg["w5"], minp5, KEYS, ts)
+        d = with_band_stats(d, passes, "_obs", KEYS, ts)
+        bands = [band_pass(p, "_obs", i) for i, p in enumerate(passes, start=1)]
+        named = {"flag_sensor": sensor_error_flag("_obs", v.code)}
+        named.update({f"flag_run{i}": b[0] for i, b in enumerate(bands, start=1)})
+        # pass-5 bands only where the support reaches minp (W15),
+        # exported back in original units
+        _, top, bottom = bands[4]
+        sup = band_support_mask("_obs", cfg["w5"], min_periods(cfg["w5"]), KEYS, ts)
         band_scale = F.lit(1.0 / NITRATE_NO3_TO_N) if v.is_nitrate else F.lit(1.0)
-        d = d.withColumn("qcband_top", F.when(sup, F.col("qcband_top") * band_scale))
-        d = d.withColumn("qcband_bottom", F.when(sup, F.col("qcband_bottom") * band_scale))
-
-        glob = combine_flags_200(*named.values())
-        d = d.withColumn("flag_global", glob)
-        d = d.withColumn("is_flagged", F.col("flag_global") == 200)
-        d = d.withColumn("flag_reason", flag_reasons(named))
-        d = d.withColumn(
-            "value_masked", F.when(F.col("is_flagged"), None).otherwise(F.col("obs_raw"))
+        d = d.withColumns(
+            {
+                **named,
+                "qcband_top": F.when(sup, top * band_scale),
+                "qcband_bottom": F.when(sup, bottom * band_scale),
+            }
         )
+
+        flags = {name: F.col(name) for name in named}
+        glob = combine_flags_200(*flags.values())
+        is_flagged = glob == 200
         outs.append(
             d.select(
-                *KEYS, ts, "obs_in", "obs_raw", "value_masked", "flag_global",
-                "is_flagged", "flag_reason", "qcband_top", "qcband_bottom", "mask_pre",
+                *KEYS, ts, "obs_in", "obs_raw",
+                F.when(is_flagged, None).otherwise(F.col("obs_raw")).alias("value_masked"),
+                glob.alias("flag_global"),
+                is_flagged.alias("is_flagged"),
+                flag_reasons(flags).alias("flag_reason"),
+                "qcband_top", "qcband_bottom",
+                F.col("obs_raw").isNull().alias("mask_pre"),
                 # per-component flags kept alongside (the reference drops
                 # them; they cost nothing and make audits/tests direct)
                 *[f"flag_run{i}" for i in range(1, 6)],
